@@ -26,9 +26,68 @@ Usage::
 
 from __future__ import annotations
 
+import functools
 import math
+import os
+import zipimport
 
 __version__ = "0.1.0"
+
+
+def _install_zip_stat_check() -> None:
+    """Make ``zipimport.zipimporter.invalidate_caches`` re-read an
+    archive only when the archive changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` on every
+    planner request and every task (``worker_util.setup_spark_files``).
+    Up to CPython 3.12 every zipimporter then re-parses its archive's
+    whole central directory in pure Python: a worker holds a dozen
+    importers over pyspark.zip, the Spark core jar, py4j and the
+    package zip, about 27k entries and 0.13-0.30 s per request.
+
+    After the wrap, an archive is re-read only when its
+    ``(st_mtime_ns, st_size, st_ino)`` differs from the stat taken just
+    before its last successful read; importers of one archive share
+    that read. A failed ``stat`` or read keeps the stock behaviour.
+    Runs when the package is imported, so unpickling the data source
+    installs it in every Spark Python worker; a second call wraps
+    nothing."""
+    stock = zipimport.zipimporter.invalidate_caches
+    if getattr(stock, "_stat_checked", False):
+        return
+    last_read: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+    @functools.wraps(stock)
+    def invalidate_caches(self):
+        archive = self.archive
+        try:
+            st = os.stat(archive)
+        except OSError:
+            last_read.pop(archive, None)
+            return stock(self)
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        hit = last_read.get(archive)
+        if hit is not None and hit[0] == key:
+            self._files = zipimport._zip_directory_cache[archive] = hit[1]
+            return
+        stock(self)
+        # record only a directory this call read itself: on success
+        # stock points self._files and the cache entry at one new dict,
+        # on failure it drops the cache entry
+        # (CPython 3.13+ only drops the cache and reads lazily, so
+        # nothing is recorded there and the stock path always runs)
+        files = vars(self).get("_files")
+        if files is not None and \
+                zipimport._zip_directory_cache.get(archive) is files:
+            last_read[archive] = (key, files)
+        else:
+            last_read.pop(archive, None)
+
+    invalidate_caches._stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_install_zip_stat_check()
 
 
 def register_fits(spark) -> None:
@@ -75,7 +134,6 @@ def _package_zip(pkg_dir: str) -> str:
     not ours or has group/other bits set is abandoned for a fresh
     ``mkdtemp`` — nothing pre-existing is ever trusted."""
     import hashlib
-    import os
     import tempfile
     import zipfile
 

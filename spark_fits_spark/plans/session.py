@@ -14,6 +14,10 @@ reading ~100 TB; locally they also give the best local[N] behavior:
 from __future__ import annotations
 
 import os
+import re
+
+_JIT_BATCH_ON = ("1", "true", "yes", "on")
+_JIT_BATCH_OFF = ("0", "false", "no", "off")
 
 
 def tuned_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
@@ -37,23 +41,31 @@ def jit_jvm_options(master: str | None = None) -> str:
     """JVM compilation-policy options (see the comment block in
     :func:`build_session` for the measured rationale).
 
-    ``-Xbatch`` (synchronous JIT) defaults ON only when ``master`` is a
-    ``local[...]`` URL — the many-plans single-JVM profile where the
-    committed full-bench A/B (OPTIMIZATION_r11.md §1) measured it
-    bounding 3–20x CPU-grind inflation across the expression-heavy
-    suite band — and OFF for cluster masters, where synchronous
+    ``-Xbatch`` (synchronous JIT) defaults ON only when ``master`` is
+    ``local`` or ``local[...]`` — the many-plans single-JVM profile where
+    the full-bench on/off pair measured it bounding 3–20x CPU-grind
+    inflation across the expression-heavy suite band — and OFF for every
+    other master, ``local-cluster[...]`` included, where synchronous
     compilation stalls every task thread at each tiered compile during
     executor warmup (r10 ADVICE). ``SPARK_GRAFT_JIT_BATCH`` overrides
     either way; 1/true/yes/on and 0/false/no/off are accepted
-    case-insensitively."""
+    case-insensitively, and any other non-blank value raises
+    ``ValueError``."""
     opts = "-XX:-DontCompileHugeMethods"
-    v = os.environ.get("SPARK_GRAFT_JIT_BATCH", "").strip().lower()
-    if v in ("1", "true", "yes", "on"):
+    raw = os.environ.get("SPARK_GRAFT_JIT_BATCH", "")
+    v = raw.strip().lower()
+    if v in _JIT_BATCH_ON:
         batch = True
-    elif v in ("0", "false", "no", "off"):
+    elif v in _JIT_BATCH_OFF:
         batch = False
+    elif v:
+        raise ValueError(
+            f"SPARK_GRAFT_JIT_BATCH={raw!r} is not recognized; accepted "
+            f"(case-insensitive): {', '.join(_JIT_BATCH_ON)} to turn "
+            f"-Xbatch on, {', '.join(_JIT_BATCH_OFF)} to turn it off, or "
+            f"unset for the master's default")
     else:
-        batch = (master or "").startswith("local")
+        batch = re.fullmatch(r"local(\[[^\]]*\])?", master or "") is not None
     if batch:
         opts += " -Xbatch"
     return opts
@@ -94,15 +106,17 @@ def build_session(app_name: str = "spark-fits-spark",
     # every span small (measured max 1953 bytecode via CodegenMetrics),
     # so the flag is cheap insurance, kept unconditional.
     #
-    # -Xbatch (synchronous JIT) — LOCAL-MASTER default only (r11,
-    # OPTIMIZATION_r11.md §1/§7). Two committed A/Bs this round:
-    # an 8-query per-rep CPU A/B found the dedup-chain grind alive
-    # under the flag (it is NOT a grind fix), but the full-bench
-    # on/off pair — both probe-gated, host_gate_ok — measured the
+    # -Xbatch (synchronous JIT) — LOCAL-MASTER default only (r11).
+    # Two committed A/Bs: an 8-query per-rep CPU A/B
+    # (OPTIMIZATION_r11.md §1, plans/r11/xbatch_ab_*.json) found the
+    # dedup-chain grind alive under the flag (it is NOT a grind fix),
+    # but the full-bench on/off pair (ON: BENCH_DETAIL.json at commit
+    # 757cf9a, host_gate_ok false; OFF: plans/r11/
+    # BENCH_DETAIL_r11_jitbatch_off.json, host_gate_ok true) measured the
     # expression-heavy suite band (q25-q86: md5 n-grams, HOF dots,
     # quantize maps) inflating 3-20x with the flag OFF in the
     # 112-query single-JVM profile, while trivial rows alongside sat
-    # at best-ever values (plans/r11/BENCH_DETAIL_r11_jitbatch_*).
+    # at best-ever values.
     # Interleaving hundreds of generated classes churns the tiered
     # compiler's queue; blocking compilation bounds it. On a CLUSTER
     # the default is OFF (r10 ADVICE: synchronous JIT stalls every

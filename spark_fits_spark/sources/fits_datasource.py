@@ -519,7 +519,7 @@ class FitsScanReader(DataSourceReader):
     def partitions(self) -> list[FitsInputPartition]:
         files = search_fits_files(self.path)
         if self.verbose:
-            logger.info("fits scan: %d file(s), hdu=%d", len(files), self.hdu_index)
+            logger.info("fits scan: %d file(s), hdu=%s", len(files), self.hdu_index)
         return self.plan_for_files(files)
 
     def plan_for_files(self, files: list[str]) -> list[FitsInputPartition]:

@@ -760,6 +760,28 @@ def test_partitions_ship_without_raw_header(spark):
     assert df.count() == 100
 
 
+def test_verbose_partitions_logs_extname_hdu(tmp_path, caplog):
+    """verbose=true logs the scan plan; an EXTNAME ``hdu`` (a string)
+    must format without a logging error."""
+    import logging
+
+    import numpy as np
+
+    from spark_fits_spark.fitscore import writer as fw
+    from spark_fits_spark.sources import fits_datasource as ds
+
+    f = str(tmp_path / "ev.fits")
+    fw.write_fits(f, [fw.bintable_hdu(
+        [("Index", "K", np.arange(3, dtype=">i8"))],
+        extra_cards=[fw._card("EXTNAME", "EVENTS")])])
+    r = ds.FitsScanReader(f, "EVENTS", None, None, None, "PERMISSIVE",
+                          8 * 1024 * 1024, True)
+    with caplog.at_level(logging.INFO, logger=ds.logger.name):
+        parts = r.partitions()
+    assert len(parts) == 1
+    assert "fits scan: 1 file(s), hdu=EVENTS" in caplog.messages
+
+
 def test_plancache_option_bypasses_lru(tmp_path):
     """.option('plancache', False): every planning re-reads headers —
     the escape hatch for same-size same-mtime in-place rewrites."""

@@ -10,6 +10,8 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _SCRIPT = textwrap.dedent(
@@ -70,12 +72,13 @@ def test_bare_session_runs_pandas_udf_operators(tmp_path):
 
 def test_jit_jvm_options_composition(monkeypatch):
     """The session's JVM compilation-policy options (r11): synchronous
-    JIT defaults ON only for local masters (the full-bench on/off A/B
-    in OPTIMIZATION_r11.md §1/§7 measured the expression-heavy band
+    JIT defaults ON only for ``local`` / ``local[...]`` masters (the
+    full-bench on/off pair measured the expression-heavy band
     inflating 3-20x without it in the many-plans single-JVM profile)
-    and OFF for cluster masters (r10 ADVICE: blocking compilation
-    stalls executor warmup); the env override wins either way with
-    normalized truthy/falsy values; the huge-method backstop is always
+    and OFF for every other master, ``local-cluster[...]`` included
+    (r10 ADVICE: blocking compilation stalls executor warmup); the env
+    override wins either way with normalized truthy/falsy values, and
+    an unrecognized value raises; the huge-method backstop is always
     present."""
     from spark_fits_spark.plans.session import jit_jvm_options
 
@@ -83,8 +86,15 @@ def test_jit_jvm_options_composition(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_JIT_BATCH", raising=False)
     assert jit_jvm_options("local[32]") == base + " -Xbatch"
     assert jit_jvm_options("local[*]") == base + " -Xbatch"
-    for cluster in ("spark://host:7077", "yarn", "k8s://https://x", None):
+    assert jit_jvm_options("local") == base + " -Xbatch"
+    for cluster in ("spark://host:7077", "yarn", "k8s://https://x", None,
+                    "local-cluster[2,1,1024]"):
         assert jit_jvm_options(cluster) == base, cluster
+    monkeypatch.setenv("SPARK_GRAFT_JIT_BATCH", "  ")
+    assert jit_jvm_options("local[32]") == base + " -Xbatch"
+    monkeypatch.setenv("SPARK_GRAFT_JIT_BATCH", "maybe")
+    with pytest.raises(ValueError, match=r"'maybe'.*1, true, yes, on"):
+        jit_jvm_options("local[32]")
     for off in ("0", "false", "no", "off", "FALSE"):
         monkeypatch.setenv("SPARK_GRAFT_JIT_BATCH", off)
         assert jit_jvm_options("local[32]") == base, off
